@@ -46,7 +46,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from ..operators.writers import BATCH_COL
+from ..operators.writers import BATCH_COL, read_batch_keyed
 from .storefs import (
     StoreFS,
     note_store_participation,
@@ -57,6 +57,8 @@ from .substring import gram_offsets
 
 #: hash-partition column for planning-time probe pruning
 BKT_PART_COL = "BKT_PART"
+# empty-store shape of ``<root>/grams`` (read_batch_keyed)
+_GRAMS_DDL = f"fp bigint, {BATCH_COL} int, {BKT_PART_COL} int"
 
 
 def _bkt_expr(n: int):
@@ -154,36 +156,14 @@ def check_substring_meta(root: str, spark: SparkSession) -> dict:
     return meta
 
 
-def _read_grams(
-    spark: SparkSession, root: str, before_batch: int | None = None
-) -> DataFrame:
-    """The raw store frame; empty (with the store's schema shape)
-    when no leaf exists yet — a stream's first batch probes an empty
-    history. ``before_batch`` prunes to BATCH_PART < it at planning
-    time (replay safety: a replayed batch dedups against its original
-    predecessor state, never its own half-written append)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        df = spark.read.parquet(f"{root}/grams")
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "UNABLE_TO_INFER_SCHEMA" in str(e):
-            from ..session import local_frame
-
-            return local_frame(
-                spark, [], f"fp bigint, {BATCH_COL} int, {BKT_PART_COL} int"
-            )
-        raise
-    if before_batch is not None:
-        df = df.filter(F.col(BATCH_COL) < before_batch)
-    return df
-
-
 def read_substring_fps(
     spark: SparkSession, root: str, before_batch: int | None = None
 ) -> DataFrame:
     """Distinct historical fingerprints (folds replayed appends)."""
-    return _read_grams(spark, root, before_batch).select("fp").distinct()
+    return (
+        read_batch_keyed(spark, f"{root}/grams", _GRAMS_DDL, before_batch)
+        .select("fp").distinct()
+    )
 
 
 def substring_store_append(
@@ -283,7 +263,9 @@ def incremental_duplicate_spans(
     # collect is a map-side partial aggregate down to <= n_buckets
     # values). The suite-sized attribution update keeps its persist;
     # this path deliberately recomputes.
-    hist = _read_grams(spark, root, before_batch)
+    hist = read_batch_keyed(
+        spark, f"{root}/grams", _GRAMS_DDL, before_batch
+    )
     if nbkt:
         touched = sorted(
             r["b"]
@@ -331,7 +313,7 @@ def store_overlap_spans(
         else gram_offsets(docs, text_col, id_col, L)
     )
     # no persist of ``g`` — see incremental_duplicate_spans' note
-    hist = _read_grams(spark, root)
+    hist = read_batch_keyed(spark, f"{root}/grams", _GRAMS_DDL)
     if nbkt:
         touched = sorted(
             r["b"]
@@ -369,7 +351,7 @@ def substring_store_stats(
     check_substring_meta(root, spark)
     per = {
         int(r[BATCH_COL]): int(r["n"])
-        for r in _read_grams(spark, root)
+        for r in read_batch_keyed(spark, f"{root}/grams", _GRAMS_DDL)
         .groupBy(BATCH_COL).agg(F.count(F.lit(1)).alias("n")).collect()
     }
     # bootstrap is exactly leaf -1; stream appends number upward from

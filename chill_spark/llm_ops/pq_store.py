@@ -125,7 +125,6 @@ def write_pq_store(
     fs = StoreFS(root, spark)
     for side in ("books", "codes"):
         _heal_pq_side(fs, root, side)
-        fs.delete(f"{root}/{side}")
     coarse: np.ndarray | None = None
     if cells > 0:
         coarse, books = ivfpq_train(
@@ -137,6 +136,11 @@ def write_pq_store(
             emb, dim=dim, m=m, k=k, iters=iters,
             vec_col=vec_col, id_col=id_col,
         )
+    # fail closed: the old sides go only once training has returned
+    # (the books are driver-side arrays), so an empty, all-null or
+    # wrong-dim corpus raises above and leaves a healthy store usable
+    for side in ("books", "codes"):
+        fs.delete(f"{root}/{side}")
     _write_books(spark, root, books, coarse)
     codes = _encode_with_books(emb, books, coarse, vec_col, id_col)
     (

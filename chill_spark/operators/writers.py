@@ -38,7 +38,8 @@ def append_batch_keyed(
     """Append a micro-batch under ``BATCH_PART=<id>`` with dynamic
     partition overwrite — a replayed batch rewrites exactly its own
     leaves, making an append-style stream sink effectively
-    exactly-once. Shared by every streaming intake."""
+    exactly-once (see ``read_batch_keyed``). Shared by every streaming
+    intake."""
     (
         df.withColumn(BATCH_COL, F.lit(batch_id))
         .write.mode("overwrite")
@@ -46,6 +47,100 @@ def append_batch_keyed(
         .partitionBy(BATCH_COL, *(extra_partition_cols or []))
         .parquet(path)
     )
+
+
+def read_batch_keyed(
+    spark: SparkSession, path: str, ddl: str, before_batch: int | None = None
+) -> DataFrame:
+    """Every leaf of a batch-keyed store with ``BATCH_PART <
+    before_batch`` (all leaves when None), or an empty ``ddl`` frame
+    when the store has no leaf yet (a stream's first batch).
+
+    Replay contract: a stream writes its sinks before it commits the
+    batch's source offsets, so a crash between the two replays batch b
+    against a store that already holds b's own leaf. Reading only
+    leaves below b gives the replay its original predecessor state,
+    and ``append_batch_keyed`` rewrites b's leaf in place — together
+    they make every batch-keyed intake exactly-once. BATCH_PART is a
+    partition column, so the filter prunes at planning time.
+
+    Only a missing path reads as empty. Any OTHER read failure
+    (corrupt footer, permissions, transient FS error) must propagate:
+    treating it as an empty store would let the batch dedup or merge
+    against nothing and silently admit duplicates of (or forget)
+    everything already ingested."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        df = spark.read.parquet(path)
+    except AnalysisException as e:
+        if "PATH_NOT_FOUND" in str(e) or "UNABLE_TO_INFER_SCHEMA" in str(e):
+            from ..session import local_frame
+
+            return local_frame(spark, [], ddl)
+        raise
+    if before_batch is not None:
+        df = df.filter(F.col(BATCH_COL) < before_batch)
+    return df
+
+
+def read_newest_snapshot(
+    spark: SparkSession, path: str, ddl: str, before_batch: int | None = None
+) -> DataFrame:
+    """``ddl``'s columns of the newest leaf with ``BATCH_PART <
+    before_batch`` in a snapshot-per-batch store (empty when none).
+
+    Mergeable state (Bloom words, CMS counters, Misra-Gries summaries)
+    is stored as one full snapshot per batch: batch b folds its
+    increment into this leaf and writes the result as its own leaf.
+    It must be the newest leaf BELOW b, not simply the newest: a
+    replayed b would otherwise fold into its own snapshot and count
+    itself twice (see ``read_batch_keyed`` for the replay contract).
+    ``before_batch=None`` reads the latest snapshot, for serving."""
+    from ..session import local_frame
+
+    empty = local_frame(spark, [], ddl)
+    prev = read_batch_keyed(spark, path, ddl, before_batch)
+    if BATCH_COL not in prev.columns:  # no store yet
+        return empty
+    latest = prev.agg(F.max(BATCH_COL)).head()[0]
+    if latest is None:
+        return empty
+    return prev.filter(F.col(BATCH_COL) == latest).select(*empty.columns)
+
+
+def check_prune_keep(keep: int) -> None:
+    """Reject ``keep == 1`` before a snapshot stream starts (see
+    ``prune_snapshots``)."""
+    if keep == 1:
+        raise ValueError(
+            "prune_keep=1 would delete the predecessor snapshot a replayed "
+            "batch folds into; keep at least 2 (or <= 0 to never prune)"
+        )
+
+
+def prune_snapshots(path: str, batch_id: int, keep: int) -> None:
+    """After batch ``batch_id`` wrote its snapshot, delete all but the
+    newest ``keep`` leaves under ``path``; ``keep <= 0`` never prunes.
+
+    The prune runs before the batch's offset commit, so a replay of
+    b needs b-1's leaf to still exist: ``keep`` must be at least 2
+    (callers reject 1 up front with ``check_prune_keep``). Leaves at
+    or above ``batch_id`` are never deleted, whatever the gaps in
+    batch ids."""
+    from ..llm_ops.storefs import StoreFS
+
+    fs = StoreFS(path)
+    if keep <= 0 or not fs.is_dir(path):
+        return
+    ids = sorted(
+        int(d.split("=", 1)[1])
+        for d in fs.list_dirs(path)
+        if d.startswith(f"{BATCH_COL}=")
+    )
+    for old in ids[:-keep]:
+        if old < batch_id:
+            fs.delete(f"{path}/{BATCH_COL}={old}")
 
 
 def write_fact(

@@ -95,16 +95,18 @@ def local_frame(spark: SparkSession, rows, schema):
         st = schema
 
     rows = list(rows)
-    names = st.fieldNames() if st is not None else list(schema)
-    int_cols = (
-        {
-            i for i, f in enumerate(st.fields)
-            if isinstance(f.dataType, IntegralType)
-        }
-        if st is not None
-        else set()
-    )
     try:
+        # inside the try: a schema that is neither DDL, StructType nor
+        # an iterable of names (e.g. a bare DataType) falls back too
+        names = st.fieldNames() if st is not None else list(schema)
+        int_cols = (
+            {
+                i for i, f in enumerate(st.fields)
+                if isinstance(f.dataType, IntegralType)
+            }
+            if st is not None
+            else set()
+        )
         tuples = [tuple(r) for r in rows]
         if any(t[i] is None for t in tuples for i in int_cols):
             return spark.createDataFrame(rows, schema)

@@ -19,6 +19,7 @@ Scale notes:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 CORRUPT_COL = "_corrupt_record"
@@ -86,3 +87,18 @@ def read_jsonl_stream(
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .json(path)
     )
+
+
+def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(good, bad) of a frame read with the corrupt-record column:
+    the parsed rows without that column, and the corrupt lines as one
+    ``rejected_line`` column (the intakes' quarantine shape). Writes
+    nothing. An intake that also rejects parsed rows unions them into
+    ``bad`` and makes ONE quarantine write per batch: a second
+    batch-keyed write to the same dir would dynamic-overwrite the
+    first."""
+    bad = df.filter(F.col(CORRUPT_COL).isNotNull()).select(
+        F.col(CORRUPT_COL).alias("rejected_line")
+    )
+    good = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
+    return good, bad

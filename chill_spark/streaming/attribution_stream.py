@@ -29,8 +29,9 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..llm_ops.attribution import attribution_update, check_attribution_meta
 from ..llm_ops.substring import gram_offsets
-from ..operators.writers import append_batch_keyed as _append_batch_keyed
-from ..sources.jsonl import CORRUPT_COL, read_jsonl_stream
+from ..operators.writers import append_batch_keyed
+from ..sources.jsonl import read_jsonl_stream, split_corrupt
+from .stream import start_foreach_batch
 
 
 def run_attribution_stream(
@@ -57,15 +58,13 @@ def run_attribution_stream(
     src = read_jsonl_stream(spark, input_dir, schema)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        new = batch_df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-        rejects = batch_df.filter(F.col(CORRUPT_COL).isNotNull()).select(
-            F.col(CORRUPT_COL).alias("rejected_line")
-        ).unionByName(
+        new, bad = split_corrupt(batch_df)
+        rejects = bad.unionByName(
             new.filter(F.col(id_col).isNull()).select(
                 F.to_json(F.struct("*")).alias("rejected_line")
             )
         )
-        _append_batch_keyed(rejects, quarantine_dir, batch_id)
+        append_batch_keyed(rejects, quarantine_dir, batch_id)
         docs = new.filter(
             F.col(id_col).isNotNull() & F.col(text_col).isNotNull()
         )
@@ -102,11 +101,6 @@ def run_attribution_stream(
         finally:
             grams.unpersist()
 
-    writer = src.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return start_foreach_batch(
+        src, handle, checkpoint_dir, available_now, trigger_seconds
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -6,13 +6,8 @@ watched directory; each micro-batch's keys are hashed into a
 word-bounded bit table (ONE bit_or groupBy) and OR-merged into a
 persisted snapshot. Bitwise OR is associative, commutative AND
 idempotent, so the streamed filter is BIT-IDENTICAL to the batch
-filter of the concatenated feed — and unlike the counting sketches
-(cms_stream, heavy_stream) a replayed batch cannot even transiently
-corrupt state: re-ORing bits already set is a no-op. The
-snapshot-per-batch discipline is kept anyway (batch b folds into the
-newest snapshot with id < b and rewrites its own leaf) so the store
-lifecycle — replay resolution, pruning, read-your-predecessor — is
-uniform across every intake.
+filter of the concatenated feed. Replay and pruning follow the shared
+snapshot-per-batch store (``operators.writers.read_newest_snapshot``).
 
 At 100 TB/day the per-batch work is one map pass + one word-bounded
 shuffle + a word-bounded snapshot merge; the probe side
@@ -24,36 +19,19 @@ the stream has absorbed.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..llm_ops.bloom import bloom_build, bloom_words
-from ..operators.writers import BATCH_COL
-from ..sources.jsonl import CORRUPT_COL, read_jsonl_stream
+from ..llm_ops.bloom import bloom_build, bloom_merge, bloom_words
+from ..operators.writers import (
+    append_batch_keyed,
+    check_prune_keep,
+    prune_snapshots,
+    read_newest_snapshot,
+)
+from ..sources.jsonl import read_jsonl_stream, split_corrupt
+from .stream import start_foreach_batch
 
-
-def _read_prev_words(
-    spark: SparkSession, path: str, before_batch: int
-) -> DataFrame:
-    """The newest snapshot with id < before_batch (empty frame when
-    none) — a replayed batch folds into its original predecessor, not
-    its own half-written snapshot."""
-    from pyspark.errors import AnalysisException
-
-    from ..session import local_frame
-
-    empty = local_frame(spark, [], "word bigint, bits bigint")
-    try:
-        df = spark.read.parquet(path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "UNABLE_TO_INFER_SCHEMA" in str(e):
-            return empty
-        raise
-    prev = df.filter(F.col(BATCH_COL) < before_batch)
-    latest = prev.agg(F.max(BATCH_COL).alias("b")).collect()[0]["b"]
-    if latest is None:
-        return empty
-    return prev.filter(F.col(BATCH_COL) == latest).select("word", "bits")
+WORDS_DDL = "word bigint, bits bigint"
 
 
 def run_bloom_stream(
@@ -73,55 +51,25 @@ def run_bloom_stream(
     """Watch ``input_dir`` for JSONL docs and maintain the Bloom word
     table under ``store_root/words``. Corrupt lines go to the
     quarantine reject channel — the same contract as every intake."""
+    check_prune_keep(prune_keep)
     if quarantine_dir is None:
         quarantine_dir = f"{store_root}/_quarantine"
     words_dir = f"{store_root}/words"
     src = read_jsonl_stream(spark, input_dir, schema)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.writers import append_batch_keyed
-
-        bad = batch_df.filter(F.col(CORRUPT_COL).isNotNull()).select(
-            F.col(CORRUPT_COL).alias("rejected_line")
-        )
+        new, bad = split_corrupt(batch_df)
         append_batch_keyed(bad, quarantine_dir, batch_id)
-        new = batch_df.filter(F.col(CORRUPT_COL).isNull())
-        batch_bloom = bloom_build(new, key_col, num_bits, num_hashes)
-        prev = _read_prev_words(spark, words_dir, batch_id)
-        merged = (
-            batch_bloom.unionByName(prev)
-            .groupBy("word")
-            .agg(F.bit_or("bits").alias("bits"))
+        merged = bloom_merge(
+            bloom_build(new, key_col, num_bits, num_hashes),
+            read_newest_snapshot(spark, words_dir, WORDS_DDL, batch_id),
         )
         append_batch_keyed(merged, words_dir, batch_id)
-        _prune_snapshots(words_dir, batch_id, prune_keep)
+        prune_snapshots(words_dir, batch_id, prune_keep)
 
-    writer = src.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return start_foreach_batch(
+        src, handle, checkpoint_dir, available_now, trigger_seconds
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
-
-
-def _prune_snapshots(words_dir: str, batch_id: int, keep: int) -> None:
-    """Drop snapshot leaves older than the newest ``keep`` (replay
-    only ever needs the immediate predecessor)."""
-    from ..llm_ops.storefs import StoreFS
-
-    fs = StoreFS(words_dir)
-    if not fs.is_dir(words_dir):
-        return
-    ids = sorted(
-        int(d.split("=", 1)[1])
-        for d in fs.list_dirs(words_dir)
-        if d.startswith(f"{BATCH_COL}=")
-    )
-    for old in ids[:-keep] if keep > 0 else []:
-        if old < batch_id:
-            fs.delete(f"{words_dir}/{BATCH_COL}={old}")
 
 
 def bloom_stream_words(
@@ -131,5 +79,6 @@ def bloom_stream_words(
     probe broadcasts — identical to ``bloom_words(bloom_build(...))``
     over the batch-equivalent corpus (OR-mergeability is exact)."""
     return bloom_words(
-        _read_prev_words(spark, f"{store_root}/words", 2**62), num_bits
+        read_newest_snapshot(spark, f"{store_root}/words", WORDS_DDL),
+        num_bits,
     )

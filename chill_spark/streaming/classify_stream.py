@@ -25,7 +25,8 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..llm_ops.classifier import score_documents
 from ..operators.writers import append_batch_keyed
-from ..sources.jsonl import CORRUPT_COL, read_jsonl_stream
+from ..sources.jsonl import read_jsonl_stream, split_corrupt
+from .stream import start_foreach_batch
 
 
 def run_classify_stream(
@@ -50,11 +51,8 @@ def run_classify_stream(
     src = read_jsonl_stream(spark, input_dir, schema)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        bad = batch_df.filter(F.col(CORRUPT_COL).isNotNull()).select(
-            F.col(CORRUPT_COL).alias("rejected_line")
-        )
+        new, bad = split_corrupt(batch_df)
         append_batch_keyed(bad, f"{out_dir}/_quarantine", batch_id)
-        new = batch_df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
         scored = score_documents(
             new, id_col, text_col, weights,
             bias=bias, threshold=threshold, weight_scale=weight_scale,
@@ -69,11 +67,6 @@ def run_classify_stream(
             f"{out_dir}/_rejected", batch_id,
         )
 
-    writer = src.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return start_foreach_batch(
+        src, handle, checkpoint_dir, available_now, trigger_seconds
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -11,12 +11,9 @@ the batch sketch of the concatenated feed, and any point-frequency
 query answered from it carries the standard one-shot CMS guarantee
 (est >= true; est <= true + eps*N w.p. 1-delta).
 
-Exactly-once posture: snapshot-per-batch, same as heavy_stream —
-batch b reads the newest snapshot with id < b and dynamic-overwrites
-``sketch/BATCH_PART=b`` with the summed counters, so a replayed batch
-recomputes from its original predecessor and rewrites its own leaf;
-``prune_keep`` bounds the snapshot tail. Snapshots are model-sized
-(<= depth*width rows) regardless of stream volume.
+Replay and pruning follow the shared snapshot-per-batch store
+(``operators.writers.read_newest_snapshot``); snapshots are
+model-sized (<= depth*width rows) regardless of stream volume.
 
 At 100 TB/day the per-batch work is one map pass + one
 depth*width-bounded shuffle + a model-sized snapshot merge — never
@@ -30,36 +27,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..llm_ops.cms import build_count_min
-from ..operators.writers import BATCH_COL
-from ..sources.jsonl import CORRUPT_COL, read_jsonl_stream
+from ..operators.writers import (
+    append_batch_keyed,
+    check_prune_keep,
+    prune_snapshots,
+    read_newest_snapshot,
+)
+from ..sources.jsonl import read_jsonl_stream, split_corrupt
+from .stream import start_foreach_batch
 
-_SKETCH_DDL = f"row INT, bucket BIGINT, cnt BIGINT, {BATCH_COL} BIGINT"
-
-
-def _read_prev_sketch(
-    spark: SparkSession, path: str, before_batch: int
-) -> DataFrame:
-    """The newest snapshot with id < before_batch (empty frame when
-    none) — NOT simply the newest: a replayed batch must fold into its
-    original predecessor, not its own half-written snapshot."""
-    from pyspark.errors import AnalysisException
-
-    from ..session import local_frame
-
-    empty = local_frame(spark, [], "row int, bucket bigint, cnt bigint")
-    try:
-        df = spark.read.parquet(path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "UNABLE_TO_INFER_SCHEMA" in str(e):
-            return empty
-        raise
-    prev = df.filter(F.col(BATCH_COL) < before_batch)
-    latest = prev.agg(F.max(BATCH_COL).alias("b")).collect()[0]["b"]
-    if latest is None:
-        return empty
-    return prev.filter(F.col(BATCH_COL) == latest).select(
-        "row", "bucket", "cnt"
-    )
+_SKETCH_DDL = "row int, bucket bigint, cnt bigint"
 
 
 def run_cms_stream(
@@ -79,6 +56,7 @@ def run_cms_stream(
     """Watch ``input_dir`` for JSONL docs and maintain the CMS counter
     table under ``store_root/sketch``. Corrupt lines go to the
     quarantine reject channel — the same contract as every intake."""
+    check_prune_keep(prune_keep)
     if quarantine_dir is None:
         quarantine_dir = f"{store_root}/_quarantine"
     sketch_dir = f"{store_root}/sketch"
@@ -86,52 +64,25 @@ def run_cms_stream(
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         from ..llm_ops.text import normalize_text
-        from ..operators.writers import append_batch_keyed
 
-        bad = batch_df.filter(F.col(CORRUPT_COL).isNotNull()).select(
-            F.col(CORRUPT_COL).alias("rejected_line")
-        )
+        new, bad = split_corrupt(batch_df)
         append_batch_keyed(bad, quarantine_dir, batch_id)
-        new = batch_df.filter(F.col(CORRUPT_COL).isNull())
         toks = new.select(
             F.explode(F.split(normalize_text(text_col), " ")).alias("tok")
         )
         batch_sketch = build_count_min(toks, "tok", depth, width)
-        prev = _read_prev_sketch(spark, sketch_dir, batch_id)
+        prev = read_newest_snapshot(spark, sketch_dir, _SKETCH_DDL, batch_id)
         merged = (
             batch_sketch.unionByName(prev)
             .groupBy("row", "bucket")
             .agg(F.sum("cnt").alias("cnt"))
         )
         append_batch_keyed(merged, sketch_dir, batch_id)
-        _prune_snapshots(sketch_dir, batch_id, prune_keep)
+        prune_snapshots(sketch_dir, batch_id, prune_keep)
 
-    writer = src.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return start_foreach_batch(
+        src, handle, checkpoint_dir, available_now, trigger_seconds
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
-
-
-def _prune_snapshots(sketch_dir: str, batch_id: int, keep: int) -> None:
-    """Drop snapshot leaves older than the newest ``keep`` (replay
-    only ever needs the immediate predecessor; a short tail is ample)."""
-    from ..llm_ops.storefs import StoreFS
-
-    fs = StoreFS(sketch_dir)
-    if not fs.is_dir(sketch_dir):
-        return
-    ids = sorted(
-        int(d.split("=", 1)[1])
-        for d in fs.list_dirs(sketch_dir)
-        if d.startswith(f"{BATCH_COL}=")
-    )
-    for old in ids[:-keep] if keep > 0 else []:
-        if old < batch_id:
-            fs.delete(f"{sketch_dir}/{BATCH_COL}={old}")
 
 
 def cms_stream_estimate(
@@ -148,5 +99,5 @@ def cms_stream_estimate(
     mergeable, so stream == batch bit-for-bit)."""
     from ..llm_ops.cms import cms_estimate
 
-    sketch = _read_prev_sketch(spark, f"{store_root}/sketch", 2**62)
+    sketch = read_newest_snapshot(spark, f"{store_root}/sketch", _SKETCH_DDL)
     return cms_estimate(sketch, queries, col, depth, width)

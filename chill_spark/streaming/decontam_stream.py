@@ -32,8 +32,9 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..llm_ops.bloom import read_bloom_store, with_bloom_contains
 from ..llm_ops.text import normalize_text
-from ..operators.writers import append_batch_keyed as _append_batch_keyed
-from ..sources.jsonl import CORRUPT_COL, read_jsonl_stream
+from ..operators.writers import append_batch_keyed
+from ..sources.jsonl import read_jsonl_stream, split_corrupt
+from .stream import start_foreach_batch
 
 
 def doc_gram_flags(
@@ -118,15 +119,12 @@ def run_decontam_stream(
     src = read_jsonl_stream(spark, input_dir, schema)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        bad = batch_df.filter(F.col(CORRUPT_COL).isNotNull()).select(
-            F.col(CORRUPT_COL).alias("rejected_line")
-        )
-        new = batch_df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
+        new, bad = split_corrupt(batch_df)
         # NULL-id rows can't ride the per-doc verdict join — reject
         # them regardless of text NULL-ness; ONE quarantine write per
         # batch (a second append_batch_keyed would dynamic-overwrite
         # the first)
-        _append_batch_keyed(
+        append_batch_keyed(
             bad.unionByName(
                 new.filter(F.col(id_col).isNull()).select(
                     F.to_json(F.struct("*")).alias("rejected_line")
@@ -149,14 +147,9 @@ def run_decontam_stream(
             .unionByName(null_text)
         )
         flagged = joined.filter(F.col("flagged")).drop("flagged")
-        _append_batch_keyed(clean, out_dir, batch_id)
-        _append_batch_keyed(flagged, flagged_dir, batch_id)
+        append_batch_keyed(clean, out_dir, batch_id)
+        append_batch_keyed(flagged, flagged_dir, batch_id)
 
-    writer = src.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return start_foreach_batch(
+        src, handle, checkpoint_dir, available_now, trigger_seconds
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -28,31 +28,16 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..llm_ops.dedup import banded_signatures, shingle_sets
 from ..llm_ops.incremental_dedup import incremental_minhash_dups
-from ..operators.writers import BATCH_COL
-from ..sources.jsonl import CORRUPT_COL, read_jsonl_stream
+from ..operators.writers import (
+    BATCH_COL,
+    append_batch_keyed,
+    read_batch_keyed,
+)
+from ..sources.jsonl import read_jsonl_stream, split_corrupt
+from .stream import start_foreach_batch
 
 _SETS_SCHEMA = "id BIGINT, sh ARRAY<BIGINT>"
 _BANDED_SCHEMA = "id BIGINT, band INT, bucket STRING"
-
-
-def _read_store_side(
-    spark: SparkSession, path: str, ddl: str
-) -> DataFrame:
-    """Empty frame when the store doesn't exist yet (first batch);
-    any OTHER read failure (corrupt footer, permissions, transient FS
-    error) must propagate — treating it as an empty store would let
-    the batch dedup only against itself and silently admit duplicates
-    of everything already ingested."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path).drop(BATCH_COL)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "UNABLE_TO_INFER_SCHEMA" in str(e):
-            from ..session import local_frame
-
-            return local_frame(spark, [], ddl)
-        raise
 
 
 def _ensure_sketch_meta(
@@ -88,9 +73,6 @@ def _path_exists(spark: SparkSession, path: str) -> bool:
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return bool(fs.exists(jpath))
-
-
-from ..operators.writers import append_batch_keyed as _append_batch_keyed
 
 
 def _doomed_new_ids(dups: DataFrame, new: DataFrame, id_col: str) -> DataFrame:
@@ -188,20 +170,19 @@ def run_dedup_stream(
     src = read_jsonl_stream(spark, input_dir, schema)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        bad = batch_df.filter(F.col(CORRUPT_COL).isNotNull()).select(
-            F.col(CORRUPT_COL).alias("rejected_line")
-        )
-        _append_batch_keyed(bad, quarantine_dir, batch_id)
-        new = batch_df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
+        new, bad = split_corrupt(batch_df)
+        append_batch_keyed(bad, quarantine_dir, batch_id)
         new = new.persist()
         new_sets = new_banded = None
         try:
             if not new.head(1):
                 return
-            old_sets = _read_store_side(spark, f"{store_root}/sets", _SETS_SCHEMA)
-            old_banded = _read_store_side(
+            old_sets = read_batch_keyed(
+                spark, f"{store_root}/sets", _SETS_SCHEMA
+            ).drop(BATCH_COL)
+            old_banded = read_batch_keyed(
                 spark, f"{store_root}/banded", _BANDED_SCHEMA
-            )
+            ).drop(BATCH_COL)
             # shingle ONCE; sketches and candidates reuse these frames
             new_sets = shingle_sets(
                 new, text_col, id_col, shingle_k, portable=portable
@@ -218,7 +199,7 @@ def run_dedup_stream(
             )
             doomed = _doomed_new_ids(dups, new, id_col)
             survivors = new.join(doomed, id_col, "left_anti")
-            _append_batch_keyed(survivors, out_dir, batch_id)
+            append_batch_keyed(survivors, out_dir, batch_id)
             leaf = f"{out_dir}/{BATCH_COL}={batch_id}"
             if not _path_exists(spark, leaf):
                 # every new doc was a duplicate: the partitioned write
@@ -235,7 +216,7 @@ def run_dedup_stream(
             surv_ids = spark.read.parquet(leaf).select(
                 F.col(id_col).alias("id")
             )
-            _append_batch_keyed(
+            append_batch_keyed(
                 new_sets.join(surv_ids, "id", "left_semi"),
                 f"{store_root}/sets", batch_id,
             )
@@ -244,7 +225,7 @@ def run_dedup_stream(
                 banded_out = banded_out.withColumn(
                     BUCKET_PART_COL, bucket_part_expr(bkt_n)
                 )
-            _append_batch_keyed(
+            append_batch_keyed(
                 banded_out, f"{store_root}/banded", batch_id,
                 extra_partition_cols=[BUCKET_PART_COL] if bkt_n else None,
             )
@@ -272,14 +253,9 @@ def run_dedup_stream(
                     cached.unpersist()
             new.unpersist()
 
-    writer = src.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return start_foreach_batch(
+        src, handle, checkpoint_dir, available_now, trigger_seconds
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def _ensure_embedding_meta(
@@ -346,10 +322,7 @@ def run_embedding_dedup_stream(
     src = read_jsonl_stream(spark, input_dir, schema)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        bad = batch_df.filter(F.col(CORRUPT_COL).isNotNull()).select(
-            F.col(CORRUPT_COL).alias("rejected_line")
-        )
-        parsed = batch_df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
+        parsed, bad = split_corrupt(batch_df)
         parsed = parsed.persist()
         new = None
         new_banded = None
@@ -377,7 +350,7 @@ def run_embedding_dedup_stream(
             rejects = parsed.filter(~usable).select(
                 F.to_json(F.struct("*")).alias("rejected_line")
             )
-            _append_batch_keyed(
+            append_batch_keyed(
                 bad.unionByName(rejects), quarantine_dir, batch_id
             )
             if not dim:
@@ -387,12 +360,12 @@ def run_embedding_dedup_stream(
                 return
             _ensure_embedding_meta(store_root, planes, bands, seed, dim)
             check_embedding_meta(store_root, planes, bands, seed, dim=dim)
-            old_vecs = _read_store_side(
+            old_vecs = read_batch_keyed(
                 spark, f"{store_root}/vectors", _VEC_SCHEMA
-            )
-            old_banded = _read_store_side(
+            ).drop(BATCH_COL)
+            old_banded = read_batch_keyed(
                 spark, f"{store_root}/banded", _EB_SCHEMA
-            )
+            ).drop(BATCH_COL)
             new_banded = banded_embedding_buckets(
                 new, vec_col, id_col, planes, bands, seed, dim=dim
             ).persist()
@@ -403,7 +376,7 @@ def run_embedding_dedup_stream(
             )
             doomed = _doomed_new_ids(dups, new, id_col)
             survivors = new.join(doomed, id_col, "left_anti")
-            _append_batch_keyed(survivors, out_dir, batch_id)
+            append_batch_keyed(survivors, out_dir, batch_id)
             leaf = f"{out_dir}/{BATCH_COL}={batch_id}"
             if not _path_exists(spark, leaf):
                 return  # all-duplicate batch: nothing to append
@@ -414,11 +387,11 @@ def run_embedding_dedup_stream(
                 F.col(id_col).alias("id"),
                 F.col(vec_col).cast("array<double>").alias("v"),
             )
-            _append_batch_keyed(
+            append_batch_keyed(
                 new_vecs.join(surv_ids, "id", "left_semi"),
                 f"{store_root}/vectors", batch_id,
             )
-            _append_batch_keyed(
+            append_batch_keyed(
                 new_banded.join(surv_ids, "id", "left_semi"),
                 f"{store_root}/banded", batch_id,
             )
@@ -443,11 +416,6 @@ def run_embedding_dedup_stream(
                     cached.unpersist()
             parsed.unpersist()
 
-    writer = src.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return start_foreach_batch(
+        src, handle, checkpoint_dir, available_now, trigger_seconds
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

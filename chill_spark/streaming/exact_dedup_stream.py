@@ -21,11 +21,8 @@ snapshot map-side:
                           positive costs one extra join row, never a
                           lost document.
 
-Exactly-once posture: the store and filter reads consider only
-snapshots/leaves with BATCH_PART < current batch (a replayed batch
-dedups against its original predecessor state, not its own
-half-written output), and every write is batch-keyed dynamic
-overwrite; the Bloom OR-merge is idempotent outright.
+Replay follows the shared batch-keyed store
+(``operators.writers.read_batch_keyed`` / ``read_newest_snapshot``).
 
 At 100 TB/day the per-batch cost is one fingerprint map pass, a
 word-bounded filter probe, an anti-join whose LEFT side is only the
@@ -45,33 +42,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..llm_ops.bloom import bloom_build, bloom_words, with_bloom_contains
+from ..llm_ops.bloom import (
+    bloom_build,
+    bloom_merge,
+    bloom_words,
+    with_bloom_contains,
+)
 from ..llm_ops.text import doc_fingerprint
-from ..operators.writers import BATCH_COL
-from ..operators.writers import append_batch_keyed as _append_batch_keyed
-from ..sources.jsonl import CORRUPT_COL, read_jsonl_stream
-from .bloom_stream import _prune_snapshots, _read_prev_words
+from ..operators.writers import (
+    append_batch_keyed,
+    check_prune_keep,
+    prune_snapshots,
+    read_batch_keyed,
+    read_newest_snapshot,
+)
+from ..sources.jsonl import read_jsonl_stream, split_corrupt
+from .bloom_stream import WORDS_DDL
+from .stream import start_foreach_batch
 
 _FP_COL = "__fp"
-
-
-def _read_prev_fps(
-    spark: SparkSession, path: str, before_batch: int
-) -> DataFrame:
-    """Fingerprints ingested by batches < before_batch (empty frame
-    when none) — BATCH_PART is the partition column, so the filter
-    prunes the current batch's own leaf at planning time."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        df = spark.read.parquet(path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "UNABLE_TO_INFER_SCHEMA" in str(e):
-            from ..session import local_frame
-
-            return local_frame(spark, [], f"{_FP_COL} string")
-        raise
-    return df.filter(F.col(BATCH_COL) < before_batch).select(_FP_COL)
 
 
 def run_exact_dedup_stream(
@@ -101,6 +90,7 @@ def run_exact_dedup_stream(
     first-occurrence-wins (no identity to pick a deterministic
     winner); they are quarantined as JSON lines rather than silently
     dropped by the semi-join."""
+    check_prune_keep(prune_keep)
     if quarantine_dir is None:
         quarantine_dir = f"{out_dir}/_quarantine"
     fps_dir = f"{store_root}/fps"
@@ -109,12 +99,9 @@ def run_exact_dedup_stream(
     src = read_jsonl_stream(spark, input_dir, schema)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        bad = batch_df.filter(F.col(CORRUPT_COL).isNotNull()).select(
-            F.col(CORRUPT_COL).alias("rejected_line")
-        )
-        new = batch_df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
+        new, bad = split_corrupt(batch_df)
         if not new.head(1):
-            _append_batch_keyed(bad, quarantine_dir, batch_id)
+            append_batch_keyed(bad, quarantine_dir, batch_id)
             return
         fpd = new.withColumn(_FP_COL, doc_fingerprint(text_col))
         nulls = fpd.filter(F.col(_FP_COL).isNull())
@@ -126,7 +113,7 @@ def run_exact_dedup_stream(
         # second append_batch_keyed to the same dir would
         # dynamic-overwrite (i.e. DELETE) the first one's leaf.
         no_id = fpd.filter(F.col(id_col).isNull())
-        _append_batch_keyed(
+        append_batch_keyed(
             bad.unionByName(
                 no_id.drop(_FP_COL).select(
                     F.to_json(F.struct("*")).alias("rejected_line")
@@ -140,42 +127,36 @@ def run_exact_dedup_stream(
         firsts = fpd.groupBy(_FP_COL).agg(F.min(id_col).alias(id_col))
         lead = fpd.join(firsts, [_FP_COL, id_col], "left_semi")
         # Bloom gate against the PREVIOUS snapshot: FALSE is a proof
-        # of absence, so those rows never touch the store join
-        words = bloom_words(
-            _read_prev_words(spark, bloom_dir, batch_id), num_bits
+        # of absence, so those rows never touch the store join. Read
+        # once: the same snapshot is the base of this batch's merge.
+        prev_words = read_newest_snapshot(
+            spark, bloom_dir, WORDS_DDL, batch_id
         )
         gated = with_bloom_contains(
-            lead, _FP_COL, words, num_bits, num_hashes, out_col="__mc"
+            lead, _FP_COL, bloom_words(prev_words, num_bits), num_bits,
+            num_hashes, out_col="__mc",
         )
         proven_new = gated.filter(~F.col("__mc")).drop("__mc")
         possible = gated.filter(F.col("__mc")).drop("__mc")
-        old_fps = _read_prev_fps(spark, fps_dir, batch_id)
+        old_fps = read_batch_keyed(
+            spark, fps_dir, f"{_FP_COL} string", batch_id
+        ).select(_FP_COL)
         absent = possible.join(old_fps, _FP_COL, "left_anti")
         survivors = proven_new.unionByName(absent).unionByName(nulls)
-        _append_batch_keyed(survivors.drop(_FP_COL), out_dir, batch_id)
+        append_batch_keyed(survivors.drop(_FP_COL), out_dir, batch_id)
         # register survivors' fingerprints; derive from the plan's
         # inputs (store reads are batch-pruned to < batch_id, so the
         # appends below can't invalidate what was read)
         surv_fps = proven_new.select(_FP_COL).unionByName(
             absent.select(_FP_COL)
         )
-        _append_batch_keyed(surv_fps, fps_dir, batch_id)
-        merged = (
-            bloom_build(surv_fps, _FP_COL, num_bits, num_hashes)
-            .unionByName(
-                _read_prev_words(spark, bloom_dir, batch_id)
-            )
-            .groupBy("word")
-            .agg(F.bit_or("bits").alias("bits"))
+        append_batch_keyed(surv_fps, fps_dir, batch_id)
+        merged = bloom_merge(
+            bloom_build(surv_fps, _FP_COL, num_bits, num_hashes), prev_words
         )
-        _append_batch_keyed(merged, bloom_dir, batch_id)
-        _prune_snapshots(bloom_dir, batch_id, prune_keep)
+        append_batch_keyed(merged, bloom_dir, batch_id)
+        prune_snapshots(bloom_dir, batch_id, prune_keep)
 
-    writer = src.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return start_foreach_batch(
+        src, handle, checkpoint_dir, available_now, trigger_seconds
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

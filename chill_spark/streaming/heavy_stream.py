@@ -12,13 +12,9 @@ frequency >= theta*N is present — ``heavy_candidates`` can never
 false-negative. Exact counts, when needed, come from one batch
 recount over the corpus (``llm_ops.heavy.heavy_hitters``).
 
-Exactly-once posture: the state is SNAPSHOT-PER-BATCH — batch b reads
-the newest snapshot with id < b and dynamic-overwrites
-``summary/BATCH_PART=b`` with the merged result, so a replayed batch
-recomputes from its original predecessor state and rewrites its own
-leaf byte-identically; a fold into a single mutable table would
-double-count on replay. Snapshots are model-sized (m counters), so
-keeping a short history costs kilobytes; ``prune_keep`` bounds it.
+Replay and pruning follow the shared snapshot-per-batch store
+(``operators.writers.read_newest_snapshot``); snapshots are
+model-sized (m counters), so a short history costs kilobytes.
 
 At 100 TB/day the per-batch work is one map pass over the batch
 (bounded state per task) + a distributed tree-merge down to one
@@ -36,31 +32,26 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..llm_ops.heavy import _mg_merge, mg_merge_summaries, mg_summaries
-from ..operators.writers import BATCH_COL
-from ..sources.jsonl import CORRUPT_COL, read_jsonl_stream
+from ..operators.writers import (
+    append_batch_keyed,
+    check_prune_keep,
+    prune_snapshots,
+    read_newest_snapshot,
+)
+from ..sources.jsonl import read_jsonl_stream, split_corrupt
+from .stream import start_foreach_batch
 
-_SUMMARY_DDL = f"tok STRING, lb BIGINT, {BATCH_COL} BIGINT"
+_SUMMARY_DDL = "tok string, lb bigint"
 
 
-def _read_prev_summary(
-    spark: SparkSession, path: str, before_batch: int
+def _read_summary(
+    spark: SparkSession, path: str, before_batch: int | None = None
 ) -> tuple[dict[str, int], int]:
-    """(counters, N) from the newest snapshot with id < before_batch —
-    NOT simply the newest: a replayed batch must fold into its
-    original predecessor, not into its own half-written snapshot."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        df = spark.read.parquet(path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "UNABLE_TO_INFER_SCHEMA" in str(e):
-            return {}, 0
-        raise
-    prev = df.filter(F.col(BATCH_COL) < before_batch)
-    latest = prev.agg(F.max(BATCH_COL).alias("b")).collect()[0]["b"]
-    if latest is None:
-        return {}, 0
-    rows = prev.filter(F.col(BATCH_COL) == latest).collect()  # <= m+1 rows
+    """(counters, N) of the newest summary snapshot below
+    ``before_batch``; the NULL-token row carries N."""
+    rows = read_newest_snapshot(
+        spark, path, _SUMMARY_DDL, before_batch
+    ).collect()  # <= m+1 rows
     counters = {r["tok"]: r["lb"] for r in rows if r["tok"] is not None}
     n = sum(r["lb"] for r in rows if r["tok"] is None)
     return counters, n
@@ -86,6 +77,7 @@ def run_heavy_stream(
     deleted after a successful write."""
     if not 0 < theta <= 1:
         raise ValueError(f"theta must be in (0, 1], got {theta}")
+    check_prune_keep(prune_keep)
     m = math.ceil(1.0 / theta)
     if quarantine_dir is None:
         quarantine_dir = f"{store_root}/_quarantine"
@@ -94,13 +86,9 @@ def run_heavy_stream(
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         from ..llm_ops.text import normalize_text
-        from ..operators.writers import append_batch_keyed
 
-        bad = batch_df.filter(F.col(CORRUPT_COL).isNotNull()).select(
-            F.col(CORRUPT_COL).alias("rejected_line")
-        )
+        new, bad = split_corrupt(batch_df)
         append_batch_keyed(bad, quarantine_dir, batch_id)
-        new = batch_df.filter(F.col(CORRUPT_COL).isNull())
         toks = new.select(
             F.explode(F.split(normalize_text(text_col), " ")).alias("tok")
         )
@@ -110,7 +98,7 @@ def run_heavy_stream(
         # (pre-r6 it was tasks * m rows, cluster-bounded not
         # model-bounded)
         parts = mg_merge_summaries(mg_summaries(toks, "tok", m), m).collect()
-        counters, n_prev = _read_prev_summary(spark, summary_dir, batch_id)
+        counters, n_prev = _read_summary(spark, summary_dir, batch_id)
         n_batch = 0
         batch_counts: dict[str, int] = {}
         for r in parts:
@@ -128,41 +116,14 @@ def run_heavy_stream(
         out = local_frame(spark,
             [(t, int(c)) for t, c in counters.items()]
             + [(None, n_prev + n_batch)],
-            "tok string, lb bigint",
+            _SUMMARY_DDL,
         )
         append_batch_keyed(out, summary_dir, batch_id)
-        _prune_snapshots(spark, summary_dir, batch_id, prune_keep)
+        prune_snapshots(summary_dir, batch_id, prune_keep)
 
-    writer = src.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return start_foreach_batch(
+        src, handle, checkpoint_dir, available_now, trigger_seconds
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
-
-
-def _prune_snapshots(
-    spark: SparkSession, summary_dir: str, batch_id: int, keep: int
-) -> None:
-    """Drop snapshot leaves older than the newest ``keep`` — replay of
-    any in-flight batch only ever needs its immediate predecessor, so
-    a small tail is ample; the guard keeps at least the last `keep`
-    regardless of gaps in batch ids."""
-    from ..llm_ops.storefs import StoreFS
-
-    fs = StoreFS(summary_dir)
-    if not fs.is_dir(summary_dir):
-        return
-    ids = sorted(
-        int(d.split("=", 1)[1])
-        for d in fs.list_dirs(summary_dir)
-        if d.startswith(f"{BATCH_COL}=")
-    )
-    for old in ids[:-keep] if keep > 0 else []:
-        if old < batch_id:
-            fs.delete(f"{summary_dir}/{BATCH_COL}={old}")
 
 
 def heavy_candidates(
@@ -179,9 +140,7 @@ def heavy_candidates(
     if not 0 < theta <= 1:
         raise ValueError(f"theta must be in (0, 1], got {theta}")
     m = math.ceil(1.0 / theta)
-    counters, n = _read_prev_summary(
-        spark, f"{store_root}/summary", 2**62
-    )
+    counters, n = _read_summary(spark, f"{store_root}/summary")
     threshold = math.ceil(theta * n)
     slack = n // (m + 1)
     rows = [

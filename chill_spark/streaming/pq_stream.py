@@ -38,8 +38,9 @@ from ..llm_ops.pq_store import (
     check_pq_meta,
     read_pq_books,
 )
-from ..operators.writers import BATCH_COL, append_batch_keyed
-from ..sources.jsonl import CORRUPT_COL, read_jsonl_stream
+from ..operators.writers import append_batch_keyed
+from ..sources.jsonl import read_jsonl_stream, split_corrupt
+from .stream import start_foreach_batch
 
 
 def run_pq_stream(
@@ -85,10 +86,7 @@ def run_pq_stream(
     src = read_jsonl_stream(spark, input_dir, schema)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        bad = batch_df.filter(F.col(CORRUPT_COL).isNotNull()).select(
-            F.col(CORRUPT_COL).alias("rejected_line")
-        )
-        parsed = batch_df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
+        parsed, bad = split_corrupt(batch_df)
         parsed = parsed.persist()
         try:
             usable = F.coalesce(
@@ -121,13 +119,11 @@ def run_pq_stream(
                     )
                 return
             codes = _encode_with_books(new, books, coarse, vec_col, id_col)
-            (
-                codes.withColumn(BATCH_COL, F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(BATCH_COL,
-                             *([CELL_COL] if coarse is not None else []))
-                .parquet(f"{store_root}/codes")
+            append_batch_keyed(
+                codes, f"{store_root}/codes", batch_id,
+                extra_partition_cols=(
+                    [CELL_COL] if coarse is not None else None
+                ),
             )
             if health_every and batch_id % health_every == 0:
                 from ..llm_ops.pq_store import pq_store_rebuild_decision
@@ -144,11 +140,6 @@ def run_pq_stream(
         finally:
             parsed.unpersist()
 
-    writer = src.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return start_foreach_batch(
+        src, handle, checkpoint_dir, available_now, trigger_seconds
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -37,8 +37,9 @@ from ..llm_ops.incremental_substring import (
     store_overlap_spans,
 )
 from ..llm_ops.substring import apply_span_removal
-from ..operators.writers import append_batch_keyed as _append_batch_keyed
-from ..sources.jsonl import CORRUPT_COL, read_jsonl_stream
+from ..operators.writers import append_batch_keyed
+from ..sources.jsonl import read_jsonl_stream, split_corrupt
+from .stream import start_foreach_batch
 
 
 def run_scrub_stream(
@@ -65,15 +66,13 @@ def run_scrub_stream(
     src = read_jsonl_stream(spark, input_dir, schema)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        new = batch_df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-        rejects = batch_df.filter(F.col(CORRUPT_COL).isNotNull()).select(
-            F.col(CORRUPT_COL).alias("rejected_line")
-        ).unionByName(
+        new, bad = split_corrupt(batch_df)
+        rejects = bad.unionByName(
             new.filter(F.col(id_col).isNull()).select(
                 F.to_json(F.struct("*")).alias("rejected_line")
             )
         )
-        _append_batch_keyed(rejects, quarantine_dir, batch_id)
+        append_batch_keyed(rejects, quarantine_dir, batch_id)
         keyed = new.filter(F.col(id_col).isNotNull())
         null_text = keyed.filter(F.col(text_col).isNull())
         docs = keyed.filter(F.col(text_col).isNotNull())
@@ -94,15 +93,10 @@ def run_scrub_stream(
                 .withColumnRenamed("cleaned", text_col)
                 .unionByName(null_text, allowMissingColumns=False)
             )
-            _append_batch_keyed(admitted, out_dir, batch_id)
+            append_batch_keyed(admitted, out_dir, batch_id)
         finally:
             grams.unpersist()
 
-    writer = src.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return start_foreach_batch(
+        src, handle, checkpoint_dir, available_now, trigger_seconds
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

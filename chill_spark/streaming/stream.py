@@ -36,6 +36,8 @@ batch preprocessed scan.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -155,6 +157,29 @@ def split_quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     return good, bad
 
 
+def start_foreach_batch(
+    src: DataFrame,
+    handle: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    available_now: bool,
+    trigger_seconds: int,
+) -> StreamingQuery:
+    """Start ``handle(batch_df, batch_id)`` as the ``foreachBatch``
+    sink of ``src`` — the one launcher every file-watch intake shares.
+    Source progress is checkpointed under ``checkpoint_dir``;
+    ``available_now`` drains the files present at start and stops,
+    otherwise the query polls every ``trigger_seconds`` (the
+    reference's CYCLE_INTERVAL)."""
+    writer = src.writeStream.foreachBatch(handle).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start()
+
+
 def run_stream(
     spark: SparkSession,
     job: JobSpec,
@@ -269,14 +294,9 @@ def run_stream(
             if prepass:
                 batch_df.unpersist()
 
-    writer = src.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return start_foreach_batch(
+        src, handle, checkpoint_dir, available_now, trigger_seconds
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def streaming_rollup(
@@ -361,8 +381,7 @@ def run_upsert_stream(
     ``<target>/_quarantine`` — underscore-prefixed, so fact partition
     discovery ignores it), never silently dropped."""
     if fmt == "jsonl":
-        from ..sources.jsonl import CORRUPT_COL as _JC
-        from ..sources.jsonl import read_jsonl_stream
+        from ..sources.jsonl import read_jsonl_stream, split_corrupt
 
         src = read_jsonl_stream(spark, input_dir, schema)
         if quarantine_dir is None:
@@ -372,18 +391,13 @@ def run_upsert_stream(
     else:
         raise ValueError(f"unsupported update format {fmt!r}")
 
-    from ..operators.writers import merge_upsert
+    from ..operators.writers import append_batch_keyed, merge_upsert
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         upd = batch_df
         if fmt == "jsonl":
-            from .dedup_stream import _append_batch_keyed
-
-            bad = upd.filter(F.col(_JC).isNotNull()).select(
-                F.col(_JC).alias("rejected_line")
-            )
-            _append_batch_keyed(bad, quarantine_dir, batch_id)
-            upd = upd.filter(F.col(_JC).isNull()).drop(_JC)
+            upd, bad = split_corrupt(batch_df)
+            append_batch_keyed(bad, quarantine_dir, batch_id)
         if version_col is not None:
             ident = [*keys, datetime_col]
             payload = [c for c in upd.columns if c not in ident]
@@ -406,14 +420,9 @@ def run_upsert_stream(
             evolve_schema=evolve_schema,
         )
 
-    writer = src.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return start_foreach_batch(
+        src, handle, checkpoint_dir, available_now, trigger_seconds
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def drain(query: StreamingQuery, stop: bool = True) -> None:

@@ -39,8 +39,9 @@ from ..llm_ops.incremental_substring import (
     substring_store_append,
 )
 from ..llm_ops.substring import apply_span_removal, gram_offsets
-from ..operators.writers import append_batch_keyed as _append_batch_keyed
-from ..sources.jsonl import CORRUPT_COL, read_jsonl_stream
+from ..operators.writers import append_batch_keyed
+from ..sources.jsonl import read_jsonl_stream, split_corrupt
+from .stream import start_foreach_batch
 
 
 def run_substring_stream(
@@ -85,20 +86,18 @@ def run_substring_stream(
     src = read_jsonl_stream(spark, input_dir, schema)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        new = batch_df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
+        new, bad = split_corrupt(batch_df)
         # ONE quarantine write per batch: corrupt lines plus NULL-id
         # rows together — a second append_batch_keyed to the same dir
         # would dynamic-overwrite (i.e. DELETE) the first one's leaf.
         # NULL-id rows reject regardless of text NULL-ness (scanning
         # only text-non-null rows would admit NULL-id+NULL-text rows).
-        rejects = batch_df.filter(F.col(CORRUPT_COL).isNotNull()).select(
-            F.col(CORRUPT_COL).alias("rejected_line")
-        ).unionByName(
+        rejects = bad.unionByName(
             new.filter(F.col(id_col).isNull()).select(
                 F.to_json(F.struct("*")).alias("rejected_line")
             )
         )
-        _append_batch_keyed(rejects, quarantine_dir, batch_id)
+        append_batch_keyed(rejects, quarantine_dir, batch_id)
         keyed = new.filter(F.col(id_col).isNotNull())
         null_text = keyed.filter(F.col(text_col).isNull())
         docs = keyed.filter(F.col(text_col).isNotNull())
@@ -121,7 +120,7 @@ def run_substring_stream(
                 .withColumnRenamed("cleaned", text_col)
                 .unionByName(null_text, allowMissingColumns=False)
             )
-            _append_batch_keyed(admitted, out_dir, batch_id)
+            append_batch_keyed(admitted, out_dir, batch_id)
             # register the batch's ORIGINAL grams (all content seen)
             # so the store stays equal to a batch build over the
             # whole feed; idempotent per batch_id (dynamic overwrite
@@ -148,11 +147,6 @@ def run_substring_stream(
         finally:
             grams.unpersist()
 
-    writer = src.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return start_foreach_batch(
+        src, handle, checkpoint_dir, available_now, trigger_seconds
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -490,6 +490,19 @@ def test_pq_store_build_and_append_reject_unusable_vectors(spark, tmp_path):
         )
 
 
+def test_pq_store_failed_rebuild_keeps_old_store(spark, tmp_path):
+    """A rebuild on an empty corpus must raise BEFORE the old books
+    and codes are deleted: the store fails closed and keeps serving."""
+    emb = _emb_df(spark, n=30, dim=8)
+    root = str(tmp_path / "pq")
+    write_pq_store(emb, root, dim=8, m=2, k=4, iters=2)
+    with pytest.raises(ValueError, match="no usable vectors"):
+        write_pq_store(emb.limit(0), root, dim=8, m=2, k=4, iters=2)
+    books, _, _ = read_pq_books(spark, root)
+    assert len(books) == 2
+    assert read_pq_codes(spark, root).count() == 30
+
+
 def test_pq_store_topk_join_matches_broadcast_batch(spark, tmp_path):
     """The cell-keyed join serve (query set never collected) must
     return exactly what the broadcast-LUT batch serve returns on the

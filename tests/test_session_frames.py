@@ -10,6 +10,7 @@ tests pin the dodge paths.
 """
 
 import pytest
+from pyspark.sql.types import LongType
 
 from chill_spark.session import local_frame, spread_if_narrow
 
@@ -29,6 +30,8 @@ SHAPES = [
     ([], "a bigint, b string"),
     ([(0, [1, 2, 3])], "i int, xs array<bigint>"),
     ([(2**60, "big")], "n bigint, s string"),
+    # neither DDL, StructType nor names: must fall back, not raise
+    ([1, 2], LongType()),
 ]
 
 

@@ -2180,18 +2180,53 @@ def test_heavy_stream_merges_batches_and_bounds_state(spark, stream_dirs):
     assert snap.filter(F.col("BATCH_PART") == latest).count() <= 6
 
 
-def test_heavy_stream_replay_does_not_double_count(spark, stream_dirs):
-    """Drop the last commit so the batch replays: the snapshot-per-
-    batch state must fold the replay into its ORIGINAL predecessor,
-    leaving N and the lower bounds unchanged."""
-    import json
-
-    from chill_spark.streaming import drain
+def _heavy_replay_case(spark):
     from chill_spark.streaming.heavy_stream import (
         heavy_candidates,
         run_heavy_stream,
     )
 
+    def state(store):
+        return {(r["tok"], r["lb"], r["n_total"])
+                for r in heavy_candidates(spark, store, 0.34).collect()}
+
+    def ok(after):  # N of the one five-token doc
+        return any(t == "x" and n == 5 for t, _, n in after)
+
+    return run_heavy_stream, dict(theta=0.34), state, ok
+
+
+def _cms_replay_case(spark):
+    from chill_spark.streaming.cms_stream import (
+        cms_stream_estimate,
+        run_cms_stream,
+    )
+
+    def state(store):
+        q = spark.createDataFrame([("x",), ("y",)], "tok string")
+        return {(r["tok"], r["est"]) for r in cms_stream_estimate(
+            spark, store, q, "tok", depth=2, width=64
+        ).collect()}
+
+    def ok(after):
+        return after == {("x", 3), ("y", 1)}
+
+    return run_cms_stream, dict(depth=2, width=64), state, ok
+
+
+@pytest.mark.parametrize("case", [_heavy_replay_case, _cms_replay_case],
+                         ids=["heavy", "cms"])
+def test_sketch_stream_replay_does_not_double_count(spark, stream_dirs, case):
+    """Drop the last commit so the batch replays: the snapshot-per-
+    batch state must fold the replay into its ORIGINAL predecessor
+    (the newest leaf BELOW the batch, not the newest leaf), leaving
+    the counts unchanged. Misra-Gries tracks N; CMS adds counters, so
+    folding into its own leaf would double every estimate."""
+    import json
+
+    from chill_spark.streaming import drain
+
+    run, params, state, ok = case(spark)
     base = os.path.dirname(stream_dirs["out"])
     ind = os.path.join(base, "hr_in"); os.makedirs(ind, exist_ok=True)
     store = os.path.join(base, "hr_store")
@@ -2200,11 +2235,10 @@ def test_heavy_stream_replay_does_not_double_count(spark, stream_dirs):
         f.write(json.dumps({"doc_id": 1, "text": "x x x y z"}) + "\n")
     kw = dict(
         schema="doc_id BIGINT, text STRING", store_root=store,
-        checkpoint_dir=ckpt, theta=0.34, available_now=True,
+        checkpoint_dir=ckpt, available_now=True, **params,
     )
-    drain(run_heavy_stream(spark, ind, **kw))
-    before = {(r["tok"], r["lb"], r["n_total"])
-              for r in heavy_candidates(spark, store, 0.34).collect()}
+    drain(run(spark, ind, **kw))
+    before = state(store)
 
     commits = os.path.join(ckpt, "commits")
     newest = max((f for f in os.listdir(commits) if f.isdigit()), key=int)
@@ -2212,12 +2246,28 @@ def test_heavy_stream_replay_does_not_double_count(spark, stream_dirs):
     crc = os.path.join(commits, f".{newest}.crc")
     if os.path.exists(crc):
         os.remove(crc)
-    drain(run_heavy_stream(spark, ind, **kw))
+    drain(run(spark, ind, **kw))
 
-    after = {(r["tok"], r["lb"], r["n_total"])
-             for r in heavy_candidates(spark, store, 0.34).collect()}
+    after = state(store)
     assert after == before
-    assert any(t == "x" and n == 5 for t, _, n in after)
+    assert ok(after), after
+
+
+def test_snapshot_streams_reject_prune_keep_one(spark, stream_dirs):
+    """prune_keep=1 would delete batch b-1's snapshot before b's
+    offset commit; a replay of b would then restart the sketch from b
+    alone. The intake must refuse it before the query starts."""
+    from chill_spark.streaming.cms_stream import run_cms_stream
+
+    base = os.path.dirname(stream_dirs["out"])
+    with pytest.raises(ValueError, match="prune_keep"):
+        run_cms_stream(
+            spark, os.path.join(base, "pk_in"), "doc_id BIGINT, text STRING",
+            store_root=os.path.join(base, "pk_store"),
+            checkpoint_dir=os.path.join(base, "pk_ckpt"),
+            available_now=True, prune_keep=1,
+        )
+    assert spark.streams.active == []
 
 
 def test_heavy_stream_prunes_old_snapshots_and_quarantines(spark, stream_dirs):
