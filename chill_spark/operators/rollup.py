@@ -4,11 +4,13 @@ The reference schedules external "TRAggr" jobs per ladder level
 (HlxTools.py:658-725, levels at :697-702). Here each level is one
 declarative hash aggregate: truncate DATETIME to the level, group by
 (keys, truncated time), aggregate every counter. Catalyst plans
-partial (map-side) + final aggregation; at 100 TB the shuffle is on
-(keys, DATETIME) — the same key the base table is written with, so
-successive ladder levels can derive from the *previous* level
-(15M -> HR -> DY -> ...) shrinking data monotonically instead of
-re-scanning the base each time (``build_ladder``).
+partial (map-side) + final aggregation, with the shuffle on (keys,
+DATETIME) — the same key the base table is written with.
+``build_ladder`` rolls every level up from the base: writing a level
+is one scan and one shuffle, whatever its depth (chaining levels off
+unpersisted lazy frames re-ran every level below on each write). The
+sketch ladders (``distinct_ladder``, ``histogram_ladder``) chain by
+design.
 """
 
 from __future__ import annotations
@@ -67,29 +69,15 @@ def build_ladder(
     levels: list[str] | None = None,
     agg_map: dict[str, str] | None = None,
 ) -> dict[str, DataFrame]:
-    """Materialize every ladder level above the base granularity.
-
-    Each level rolls up from the previous one — valid for the default
-    additive aggregates (sum/min/max/count re-aggregate losslessly;
-    avg is rewritten as sum+count internally when requested).
-    """
-    agg_map = agg_map or {}
-    if any(v == "avg" for v in agg_map.values()):
-        # avg doesn't re-aggregate: fall back to from-base per level
-        return {
-            g: rollup(
-                base_df, table.key_fields, [c.db_name for c in table.counters],
-                g, agg_map,
-            )
-            for g in (levels or table.ladder_above_base())
-        }
+    """Every ladder level above the base granularity, each rolled up
+    from the base. Rolling up from the base is exact for every
+    aggregate, including count and avg, which do not re-aggregate
+    (a count of a count counts groups, not rows)."""
     counters = [c.db_name for c in table.counters]
-    out: dict[str, DataFrame] = {}
-    prev = base_df
-    for g in levels or table.ladder_above_base():
-        prev = rollup(prev, table.key_fields, counters, g, agg_map)
-        out[g] = prev
-    return out
+    return {
+        g: rollup(base_df, table.key_fields, counters, g, agg_map)
+        for g in levels or table.ladder_above_base()
+    }
 
 
 SKETCH_COL = "__hll"

@@ -9,14 +9,15 @@ SURVEY §3.2).
 One distributed pass per target table over a cached preprocessed
 frame; scalar per-file fields are column functions so nothing is
 computed driver-side. Returns per-table DataFrames plus run metrics
-(skipped columns, unmatched files, distinct DATETIMEs — A3).
+(skipped columns, unmatched rows, distinct DATETIMEs — A3), all
+observed by the writes themselves.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog.model import Catalog
@@ -24,13 +25,20 @@ from .config.model import JobSpec
 from .operators.derive import apply_fields
 from .operators.project import conform_to_schema
 from .operators.writers import write_fact
-from .sources.csv_source import extract_tags, scan_csv_preprocessed, tag_columns
+from .sources.csv_source import (
+    extract_tags_from_files,
+    infer_columns,
+    preprocess_files,
+    tag_columns,
+)
 
 
 @dataclass
 class RunResult:
     tables: dict[str, DataFrame] = field(default_factory=dict)
-    datetimes: dict[str, list] = field(default_factory=dict)  # A3 bookkeeping
+    # A3 bookkeeping: distinct DATETIMEs per written table, collected
+    # by the write's Observation (None last if any DATETIME was null)
+    datetimes: dict[str, list] = field(default_factory=dict)
     derive_errors: list[str] = field(default_factory=list)
     written: dict[str, str] = field(default_factory=dict)  # table -> path
     # Run metrics — the reference silently drops unmatched files
@@ -38,12 +46,14 @@ class RunResult:
     # those semantics but surface counters (SURVEY §7.4 risk register).
     # skipped_columns: plan-time, per table. rows/null_datetime: runtime
     # via df.observe (piggybacks on the write action, zero extra jobs).
-    # unmatched_rows: rows whose routing key matched no table.
+    # unmatched_rows: rows whose routing key matched no table, summed
+    # by an Observation on routing_df that the first write fires.
     skipped_columns: dict[str, list[str]] = field(default_factory=dict)
     metrics: dict[str, dict] = field(default_factory=dict)
     unmatched_rows: int | None = None
-    # pre-routing-filter frame (OM_GROUP derived, cached upstream) —
-    # run_batch counts unmatched rows from it
+    # pre-routing-filter frame of the first routed table (OM_GROUP
+    # derived over all rows, cached upstream); in run_batch it carries
+    # the unmatched-row Observation
     routing_df: DataFrame | None = None
     # the cached preprocessed frame transform() created. Callers that
     # run transform repeatedly in one session (run_stream: once per
@@ -75,7 +85,25 @@ def transform(
     pass it so tags come from exactly those files — the streaming
     pre-pass does; re-scanning ``input_dir`` here would read files
     outside the micro-batch (or already-deleted ones)."""
+    return _transform(spark, job, catalog, views, raw, tags_df)
+
+
+def _transform(
+    spark: SparkSession,
+    job: JobSpec,
+    catalog: Catalog,
+    views: dict[str, DataFrame] | None = None,
+    raw: DataFrame | None = None,
+    tags_df: DataFrame | None = None,
+    unmatched: Observation | None = None,
+) -> RunResult:
+    """``transform``; ``unmatched``, when given, observes the routing
+    frame's rows whose routing key names no table."""
     path = f"{job.input_dir}/{job.input_mask}"
+    tag_names = sorted({f.tag for f in job.fields if f.source == "tag" and f.tag})
+    if raw is None or (tag_names and tags_df is None):
+        # listed once; the scan and the tag pass share the listing
+        files = spark.read.format("binaryFile").load(path)
     if raw is None:
         # column superset = every raw name the catalog declares; files
         # carry a subset each (routing mixes layouts) -> absent columns
@@ -85,15 +113,14 @@ def transform(
             for spec in t.stored_columns:
                 if spec.raw_name and spec.raw_name not in raw_cols:
                     raw_cols.append(spec.raw_name)
-        raw = scan_csv_preprocessed(spark, path, job, columns=raw_cols or None)
+        raw = preprocess_files(files, job, raw_cols or infer_columns(spark, path, job))
 
     # tag side table (P4): tiny, broadcast-joined on _file
-    tag_names = sorted({f.tag for f in job.fields if f.source == "tag" and f.tag})
     if tag_names:
         tags = (
             tags_df
             if tags_df is not None
-            else tag_columns(extract_tags(spark, path, tag_names), tag_names)
+            else tag_columns(extract_tags_from_files(files, tag_names), tag_names)
         )
         raw = raw.join(F.broadcast(tags), "_file", "left")
     tag_cols = {t: F.col(t) for t in tag_names}
@@ -102,6 +129,7 @@ def transform(
 
     res = RunResult()
     res.cached_raw = raw
+    groups = [t.counter_group for t in catalog.tables.values()]
     for table in catalog.tables.values():
         fields = job.fields_for(table.name)
         derived = apply_fields(
@@ -115,7 +143,13 @@ def transform(
         df = derived.df
         if job.om_group_field and job.om_group_field in df.columns:
             if res.routing_df is None:
-                res.routing_df = df  # OM_GROUP over ALL rows, pre-filter
+                # OM_GROUP over ALL rows, pre-filter
+                if unmatched is not None:
+                    key = F.col(job.om_group_field)
+                    df = df.observe(unmatched, F.sum(
+                        F.when(~key.isin(groups) | key.isNull(), 1).otherwise(0)
+                    ).alias("unmatched"))
+                res.routing_df = df
             df = df.filter(
                 F.col(job.om_group_field) == F.lit(table.counter_group)
             )
@@ -142,12 +176,12 @@ def run_batch(
     views: dict[str, DataFrame] | None = None,
 ) -> RunResult:
     """transform + idempotent partitioned write + A3 bookkeeping +
-    run metrics (rows / null-DATETIME per table via Observation —
-    measured by the write action itself, no extra scan; unmatched-row
-    count from one cheap job over the cached preprocessed frame)."""
-    from pyspark.sql import Observation
-
-    res = transform(spark, job, catalog, views)
+    run metrics. Every metric — rows, null DATETIMEs, per-counter
+    non-null counts and the distinct DATETIMEs per table, and the
+    unmatched-row sum — is an Observation that the writes fire, so
+    run_batch starts no Spark job besides its writes."""
+    unmatched = Observation("chill_unmatched")
+    res = _transform(spark, job, catalog, views, unmatched=unmatched)
     observations: dict[str, Observation] = {}
     counter_cols: dict[str, list[str]] = {}
     for table in catalog.tables.values():
@@ -171,29 +205,25 @@ def run_batch(
                 F.sum(F.when(F.col(c).isNotNull(), 1).otherwise(0)).alias(f"nn_{c}")
                 for c in counters
             ],
+            F.collect_set("DATETIME").alias("datetimes"),
         )
         observations[table.name] = obs
         path = f"{out_dir}/{table.name}_{table.base_granularity}"
         write_fact(df, path)
         res.written[table.name] = path
-        res.datetimes[table.name] = [
-            r[0]
-            for r in df.select("DATETIME").distinct().collect()
-        ]
     for name, obs in observations.items():
         m = dict(obs.get)
         nn = {c: m.pop(f"nn_{c}") for c in counter_cols[name]}
+        res.datetimes[name] = sorted(m.pop("datetimes")) + (
+            [None] if m["null_datetime"] else []
+        )
         m["skipped_columns"] = res.skipped_columns.get(name, [])
         m["all_null_columns"] = [
             c for c, v in nn.items() if m["rows"] > 0 and v == 0
         ]
         res.metrics[name] = m
     if job.om_group_field and res.routing_df is not None:
-        groups = [t.counter_group for t in catalog.tables.values()]
-        res.unmatched_rows = res.routing_df.filter(
-            ~F.col(job.om_group_field).isin(groups)
-            | F.col(job.om_group_field).isNull()
-        ).count()
+        res.unmatched_rows = unmatched.get["unmatched"] or 0
     # every result table is written and every metric collected — the
     # preprocessed cache has served its purpose
     res.release()

@@ -1,28 +1,39 @@
 """Expected-vs-actual reconciliation (Layer B, HlxTools.py:763-936) —
 distributed.
 
-The reference's per-row/per-column Python loops become five
-declarative comparisons, each collecting only a bounded result into
-the report (the 100 TB constraint: anti-joins and diffs stay on
-executors; the driver sees counts + capped samples):
+The reference's per-row/per-column Python loops become one full outer
+join on (keys, DATETIME) whose rows carry a flag per side. Every
+defect class is read off that one joined frame, and the driver
+collects only counts and capped samples in one bounded action (the
+100 TB constraint: joins and diffs stay on executors):
 
-- counts            row counts both sides (A4)
+- counts            row counts both sides (A4), observed on the two
+                    join inputs
 - schema_diff       declared vs actual column sets (driver-side set op)
-- missing rows      left-anti joins both directions (J4/J5)
-- value diff        inner join on keys + unpivoted per-counter
-                    tolerant compare (J3; numeric tolerance =
-                    equality of round(x,3), HlxTools.py:916-918)
-- referential       fact keys - dim keys (J6)
+- missing rows      joined rows with one side absent (J4/J5)
+- value diff        joined rows with both sides present, unpivoted per
+                    counter into a tolerant compare (J3; numeric
+                    tolerance = equality of round(x,3),
+                    HlxTools.py:916-918)
+- referential       fact keys - dim keys (J6), unioned into the same
+                    bounded collect
+
+``missing_rows``, ``value_diff`` and ``referential_violations`` are the
+same comparisons as standalone frames.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 DEFAULT_SAMPLE = 1000  # max diff/missing rows collected per table
+
+# defect classes of compare_tables' joined frame
+_MISSING_IN_DB, _MISSING_IN_RD, _DIFF, _NOT_IN_DIM = 0, 1, 2, 3
 
 
 def missing_rows(expected: DataFrame, actual: DataFrame, keys: list[str]) -> DataFrame:
@@ -41,33 +52,22 @@ def referential_violations(
     )
 
 
-def value_diff(
-    expected: DataFrame,
-    actual: DataFrame,
-    keys: list[str],
-    counters: list[str],
-    round_scale: int = 3,
-) -> DataFrame:
-    """Per-key, per-counter tolerant diff (J3 + HlxTools.py:908-935).
+def _diff_entries(
+    cols: list[str], round_scale: int = 3, matched: Column | None = None
+) -> list[Column]:
+    """One ``(kind, counter, rd, db, is_diff)`` struct per counter over
+    a frame carrying ``__rd_<c>``/``__db_<c>`` columns (J3 +
+    HlxTools.py:908-935).
 
     Numeric values differ when ``round(x,3) != round(y,3)`` (the
     reference's exact rule — round-then-compare, not abs-tolerance);
-    non-numeric values compare as strings; a null on exactly one side
-    is a diff. Output: one row per (keys, counter) mismatch with rd/db
-    string values — unpivoted via an exploded struct array so the diff
-    stays a single distributed pass regardless of counter count.
-    """
-    cols = [c for c in counters if c in expected.columns and c in actual.columns]
-    e = expected.select(
-        *keys, *[F.col(c).alias(f"__rd_{c}") for c in cols]
-    )
-    a = actual.select(*keys, *[F.col(c).alias(f"__db_{c}") for c in cols])
-    j = e.join(a, keys, "inner")
-
+    values that do not parse as numbers (``try_cast`` gives NULL, never
+    an ANSI error) compare as strings; a null on exactly one side is a
+    diff. ``matched`` limits diffs to rows present on both sides."""
     entries = []
     for c in cols:
         rd, db = F.col(f"__rd_{c}"), F.col(f"__db_{c}")
-        rd_n, db_n = rd.cast("double"), db.cast("double")
+        rd_n, db_n = rd.try_cast("double"), db.try_cast("double")
         both_numeric = rd_n.isNotNull() & db_n.isNotNull()
         num_diff = F.round(rd_n, round_scale) != F.round(db_n, round_scale)
         str_diff = rd.cast("string") != db.cast("string")
@@ -77,13 +77,44 @@ def value_diff(
         )
         entries.append(
             F.struct(
+                F.lit(_DIFF).alias("kind"),
                 F.lit(c).alias("counter"),
                 rd.cast("string").alias("rd"),
                 db.cast("string").alias("db"),
-                is_diff.alias("is_diff"),
+                (is_diff if matched is None else matched & is_diff).alias("is_diff"),
             )
         )
-    exploded = j.select(*keys, F.explode(F.array(*entries)).alias("e"))
+    return entries
+
+
+def _sides(
+    expected: DataFrame, actual: DataFrame, keys: list[str], counters: list[str]
+) -> tuple[DataFrame, DataFrame, list[str]]:
+    """Both sides projected to keys + ``__rd_``/``__db_`` counters."""
+    cols = [c for c in counters if c in expected.columns and c in actual.columns]
+    e = expected.select(*keys, *[F.col(c).alias(f"__rd_{c}") for c in cols])
+    a = actual.select(*keys, *[F.col(c).alias(f"__db_{c}") for c in cols])
+    return e, a, cols
+
+
+def value_diff(
+    expected: DataFrame,
+    actual: DataFrame,
+    keys: list[str],
+    counters: list[str],
+    round_scale: int = 3,
+) -> DataFrame:
+    """Per-key, per-counter tolerant diff over the inner join on keys
+    (rules in ``_diff_entries``). Output: one row per (keys, counter)
+    mismatch with rd/db string values — unpivoted via an exploded
+    struct array so the diff stays a single distributed pass regardless
+    of counter count.
+    """
+    e, a, cols = _sides(expected, actual, keys, counters)
+    j = e.join(a, keys, "inner")
+    exploded = j.select(
+        *keys, F.explode(F.array(*_diff_entries(cols, round_scale))).alias("e")
+    )
     return exploded.filter(F.col("e.is_diff")).select(
         *keys,
         F.col("e.counter").alias("counter"),
@@ -122,6 +153,52 @@ class TableReport:
         )
 
 
+def _defects(
+    expected: DataFrame, actual: DataFrame, keys: list[str], counters: list[str]
+) -> DataFrame:
+    """One row per defect — ``(__kind, keys..., __counter, __rd, __db)``
+    — from one full outer join on ``keys`` whose sides carry a flag.
+    An unmatched row (NULL keys never match, as in ``missing_rows``) is
+    a missing record; a matched pair yields its per-counter diffs.
+    Duplicate keys pair up as in the inner join of ``value_diff``."""
+    e, a, cols = _sides(expected, actual, keys, counters)
+    j = e.withColumn("__in_rd", F.lit(True)).join(
+        a.withColumn("__in_db", F.lit(True)), keys, "full_outer"
+    )
+    in_rd, in_db = F.col("__in_rd").isNotNull(), F.col("__in_db").isNotNull()
+    null = F.lit(None).cast("string")
+
+    def missing(kind: int, only: Column) -> Column:
+        return F.struct(
+            F.lit(kind).alias("kind"), null.alias("counter"), null.alias("rd"),
+            null.alias("db"), only.alias("is_diff"),
+        )
+
+    entries = [
+        missing(_MISSING_IN_DB, in_rd & ~in_db),
+        missing(_MISSING_IN_RD, in_db & ~in_rd),
+        *_diff_entries(cols, matched=in_rd & in_db),
+    ]
+    return (
+        j.select(*keys, F.explode(F.array(*entries)).alias("e"))
+        .filter(F.col("e.is_diff"))
+        .select(
+            F.col("e.kind").alias("__kind"), *keys,
+            F.col("e.counter").alias("__counter"),
+            F.col("e.rd").alias("__rd"), F.col("e.db").alias("__db"),
+        )
+    )
+
+
+def _observed_count(obs: Observation) -> int:
+    """The row count an Observation saw. A side the optimizer proved
+    empty is planned away with its observer, and Spark then completes
+    the Observation with an empty row, which ``Observation.get``
+    cannot convert."""
+    row = obs._jo.getRow()
+    return row.getLong(0) if row.length() else 0
+
+
 def compare_tables(
     expected: DataFrame,
     actual: DataFrame,
@@ -136,42 +213,62 @@ def compare_tables(
     """Full per-table reconciliation -> bounded TableReport.
 
     ``keys`` are the declared entity keys; DATETIME is always appended
-    for fact identity (HlxTools.py:862).
+    for fact identity (HlxTools.py:862). Each sample list holds at most
+    ``sample`` entries, taken in key order.
     """
     rep = TableReport(table=table)
-    rep.rd_num_records = expected.count()
-    rep.db_num_records = actual.count()
-
     declared = set(counters)
     rep.missing_columns = sorted(declared - set(actual.columns))
     usable = [c for c in counters if c not in rep.missing_columns]
-
-    if dim is not None:
-        dkeys = dim_keys or keys
-        rep.missing_in_conf = [
-            tuple(r) for r in referential_violations(actual, dim, dkeys).take(sample)
-        ]
+    dkeys = dim_keys or keys
 
     full_keys = list(keys) + [datetime_col]
     missing_keys = [k for k in full_keys if k not in expected.columns or k not in actual.columns]
     if missing_keys:
+        rep.rd_num_records = expected.count()
+        rep.db_num_records = actual.count()
+        if dim is not None:
+            rep.missing_in_conf = [
+                tuple(r) for r in referential_violations(actual, dim, dkeys).take(sample)
+            ]
         rep.errors.append(f"key columns missing: {missing_keys}")
         return rep
 
-    rep.missing_oracle_records = [
-        tuple(r)
-        for r in missing_rows(expected, actual, full_keys)
-        .select(*full_keys)
-        .take(sample)
-    ]
-    rep.missing_raw_data_records = [
-        tuple(r)
-        for r in missing_rows(actual, expected, full_keys)
-        .select(*full_keys)
-        .take(sample)
-    ]
-    rep.diffs = [
-        tuple(r)
-        for r in value_diff(expected, actual, full_keys, usable).take(sample)
-    ]
+    rd_obs, db_obs = Observation(), Observation()
+    defects = _defects(
+        expected.observe(rd_obs, F.count(F.lit(1)).alias("n")),
+        actual.observe(db_obs, F.count(F.lit(1)).alias("n")),
+        full_keys, usable,
+    )
+    if dim is not None:
+        refs = referential_violations(actual, dim, dkeys)
+        defects = defects.unionByName(
+            refs.select(F.lit(_NOT_IN_DIM).alias("__kind"), *dkeys),
+            allowMissingColumns=True,
+        )
+    order = list(dict.fromkeys(full_keys + dkeys))
+    # row_number <= sample per class is planned as a per-task top-k
+    # ahead of the shuffle (WindowGroupLimit, for samples up to
+    # spark.sql.optimizer.windowGroupLimitThreshold, 1000 by default),
+    # so the one collect stays bounded
+    w = Window.partitionBy("__kind").orderBy(*order, "__counter")
+    rows = (
+        defects.withColumn("__n", F.row_number().over(w))
+        .filter(F.col("__n") <= sample)
+        .collect()
+    )
+    rep.rd_num_records = _observed_count(rd_obs)
+    rep.db_num_records = _observed_count(db_obs)
+    lists = {
+        _MISSING_IN_DB: rep.missing_oracle_records,
+        _MISSING_IN_RD: rep.missing_raw_data_records,
+        _DIFF: rep.diffs,
+        _NOT_IN_DIM: rep.missing_in_conf,
+    }
+    for r in sorted(rows, key=lambda r: (r["__kind"], r["__n"])):
+        kind = r["__kind"]
+        entry = tuple(r[k] for k in (dkeys if kind == _NOT_IN_DIM else full_keys))
+        if kind == _DIFF:
+            entry += (r["__counter"], r["__rd"], r["__db"])
+        lists[kind].append(entry)
     return rep

@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -21,3 +23,41 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+class SparkJobs:
+    """Counts the Spark jobs started inside ``group(name)`` blocks."""
+
+    _ids = itertools.count(1)
+
+    def __init__(self, spark) -> None:
+        self.sc = spark.sparkContext
+
+    def new_name(self) -> str:
+        return f"test-jobs-{next(self._ids)}"
+
+    @contextmanager
+    def group(self, name: str):
+        prev = self.sc.getLocalProperty("spark.jobGroup.id")
+        self.sc.setLocalProperty("spark.jobGroup.id", name)
+        try:
+            yield
+        finally:
+            self.sc.setLocalProperty("spark.jobGroup.id", prev)
+
+    def count(self, name: str) -> int:
+        # job starts reach the status store through the listener bus
+        self.sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(self.sc.statusTracker().getJobIdsForGroup(name))
+
+    def run(self, fn):
+        """(fn(), number of Spark jobs it started)."""
+        name = self.new_name()
+        with self.group(name):
+            out = fn()
+        return out, self.count(name)
+
+
+@pytest.fixture
+def spark_jobs(spark) -> SparkJobs:
+    return SparkJobs(spark)

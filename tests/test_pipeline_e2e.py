@@ -225,6 +225,73 @@ def test_rollup_ladder(spark, fixture_dir):
     assert str(dy[0]["DATETIME"]) == "2024-01-01 00:00:00"
 
 
+def test_count_ladder_counts_base_rows(spark):
+    """A count counter rolls up from the base rows at every level:
+    8 quarter-hour rows over 2 hours count 4 per hour and 8 per day,
+    not the rows of the level below."""
+    from datetime import datetime
+
+    t = TableSpec(
+        name="COUNTED", counter_group="OM_X", base_granularity="15M",
+        key_fields=["SITE"],
+        columns=[
+            ColumnSpec("SITE", raw_name="site", dtype="string", kind="KEY"),
+            ColumnSpec("C", raw_name="c", dtype="double"),
+        ],
+    )
+    base = spark.createDataFrame(
+        [("s1", datetime(2024, 1, 1, h, m), 1.0) for h in (0, 1) for m in (0, 15, 30, 45)],
+        "SITE string, DATETIME timestamp, C double",
+    )
+    ladder = build_ladder(base, t, agg_map={"C": "count"})
+    assert sorted(r["C"] for r in ladder["HR"].collect()) == [4, 4]
+    assert [r["C"] for r in ladder["DY"].collect()] == [8]
+
+
+def test_ladder_level_write_job_budget(spark, spark_jobs, fixture_dir, tmp_path):
+    """Writing any ladder level is one rollup from the base: at most
+    2 Spark jobs (its shuffle and its write), however deep the level."""
+    from chill_spark.operators.writers import write_fact
+
+    cat = make_catalog()
+    res = run_batch(spark, make_job(fixture_dir), cat, str(tmp_path / "base"))
+    t = cat.tables["CELL_STATS"]
+    base = read_fact(spark, res.written["CELL_STATS"])
+    ladder = build_ladder(base, t)
+    assert list(ladder) == ["HH", "HR", "DY", "WK", "MO", "YR"]
+    for level, df in ladder.items():
+        _, jobs = spark_jobs.run(lambda: write_fact(df, str(tmp_path / level)))
+        assert jobs <= 2, (level, jobs)
+    yr = read_fact(spark, str(tmp_path / "YR")).collect()
+    assert {r["SITE"]: r["CALLS"] for r in yr} == {"s1": 210.0, "s2": 200.0, "s3": 50.0}
+
+
+def test_run_batch_starts_no_job_besides_its_writes(
+    spark, spark_jobs, fixture_dir, tmp_path, monkeypatch
+):
+    """The A3 DATETIME lists and the unmatched-row count ride on the
+    writes' Observations."""
+    import chill_spark.pipeline as pipeline
+
+    write_group = spark_jobs.new_name()
+    write = pipeline.write_fact
+
+    def grouped_write(df, path):
+        with spark_jobs.group(write_group):
+            write(df, path)
+
+    monkeypatch.setattr(pipeline, "write_fact", grouped_write)
+    res, jobs = spark_jobs.run(
+        lambda: run_batch(spark, make_job(fixture_dir), make_catalog(), str(tmp_path))
+    )
+    assert jobs == 0
+    assert spark_jobs.count(write_group) >= 2
+    assert [str(d) for d in res.datetimes["CELL_STATS"]] == [
+        "2024-01-01 00:00:00", "2024-01-01 00:15:00",
+    ]
+    assert res.unmatched_rows == 0
+
+
 def test_python_datasource_matches_preprocessed_scan(spark, tmp_path):
     """The chill_csv Python Data Source (Spark 4 pluggable source)
     returns the same rows as scan_csv_preprocessed for the same
